@@ -8,6 +8,14 @@ IDF over the *candidate set*; this engine computes proper
 corpus-level IDF — a strict improvement enabled by having the whole
 corpus as a DataFrame (documented divergence).
 
+One postings pass, one scorer. :func:`content_postings` is the only
+tokenize → explode → filter → groupBy postings pass; :func:`bm25_topk`
+is the only BM25 scorer (idf, the k1/b term, the order-independent
+fixed-point sum, rounding, the score-desc/id-asc top-k). Every BM25
+path — corpus-IDF, candidate-IDF, weighted-term, and the prebuilt and
+segmented indexes in ``indexing`` — only assembles the scorer's
+(id, token, tf, dl, df[, w]) input and its two corpus statistics.
+
 Spark-first design: an inverted index is just
 ``explode(tokens) → groupBy(doc, token).count()``. All aggregation is
 partial-agg friendly (map-side combine), the per-token document
@@ -21,7 +29,7 @@ term-at-a-time evaluation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cocoindex_data_ingestion_spark.functions.localrel import local_df
@@ -34,56 +42,146 @@ from cocoindex_data_ingestion_spark.functions.text import bm25_tokens
 
 K1 = 1.2  # app/services/search_service.py:330
 B = 0.75  # app/services/search_service.py:331
+SCORE_DIGITS = 4  # every BM25 score is stable-rounded to this many digits
 
 
-def build_postings(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Inverted postings: (id, token, tf). One shuffle on (id, token).
-
-    explode-then-filter (not an array-lambda filter): the stopword/
-    length predicate is a codegen'd Filter with an IN-list — the
-    array-lambda form runs interpreted and dominates at corpus scale
-    (measured ~40s/pass on 250k docs vs ~1s for this shape)."""
-    from cocoindex_data_ingestion_spark.functions.text import (
-        is_content_token, tokenize,
-    )
-
-    return (
-        docs.select(F.col(id_col), F.explode(tokenize(text_col)).alias("token"))
-        .filter(is_content_token("token"))
-        .groupBy(id_col, "token")
-        .agg(F.count("*").alias("tf"))
-    )
+def query_tokens(terms: list[str]) -> list[str]:
+    """Query terms as postings tokens: lowercased, first occurrence kept."""
+    return list(dict.fromkeys(t.lower() for t in terms))
 
 
 def doc_lengths(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     return docs.select(F.col(id_col), F.size(bm25_tokens(text_col)).alias("dl"))
 
 
-def content_postings(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Full content-token postings ``(id, token, tf)`` — THE shareable
-    corpus pass for multi-leg BM25 callers (r11, guide §1.4/§6).
+def _keep_terms(toks: DataFrame, terms: list[str] | DataFrame | None) -> DataFrame:
+    """Rows whose ``token`` is a query term: an IN-list for a term list,
+    a broadcast join for a (token, ...) DataFrame of terms."""
+    if terms is None:
+        return toks
+    if isinstance(terms, DataFrame):
+        return toks.join(F.broadcast(terms.select("token")), "token")
+    return toks.filter(F.col("token").isin(terms))
 
-    Checkpointed by the caller, one table replaces every per-leg
-    re-tokenize: per-term qpost is a filter of it, doc length is
-    ``sum(tf)`` grouped by id (provably the same count as
+
+def content_postings(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    terms: list[str] | DataFrame | None = None,
+) -> DataFrame:
+    """Content-token postings ``(id, token, tf)`` — the one postings
+    pass every BM25 path uses. One shuffle on (id, token).
+
+    ``terms`` restricts the postings to query terms BEFORE the
+    aggregate, so a per-query pass shuffles only query-term hits, not
+    the corpus vocabulary.
+
+    explode-then-filter (not an array-lambda filter): the stopword/
+    length predicate is a codegen'd Filter with an IN-list — the
+    array-lambda form runs interpreted and dominates at corpus scale
+    (measured ~40s/pass on 250k docs vs ~1s for this shape).
+
+    Checkpointed by a multi-leg caller, one full table replaces every
+    per-leg re-tokenize (r11): per-term postings are a filter of it,
+    doc length is ``sum(tf)`` grouped by id (the same count as
     ``size(bm25_tokens(text))`` — both count the identical filtered
     token multiset), and PRF expansion frequencies are ``sum(tf)``
-    over the feedback docs (equal to counting the exploded
-    occurrences). All integer arithmetic — bit-identical scores."""
+    over the feedback docs. All integer arithmetic — bit-identical
+    scores."""
     from cocoindex_data_ingestion_spark.functions.text import (
         is_content_token, tokenize,
     )
 
+    toks = docs.select(
+        F.col(id_col), F.explode(tokenize(text_col)).alias("token")
+    ).filter(is_content_token("token"))
     return (
-        docs.select(F.col(id_col), F.explode(tokenize(text_col)).alias("token"))
-        .filter(is_content_token("token"))
+        _keep_terms(toks, terms)
         .groupBy(id_col, "token")
         .agg(F.count("*").alias("tf"))
     )
+
+
+def doc_freqs(postings: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Per-token document frequency ``(token, df)`` of a postings table."""
+    return postings.groupBy("token").agg(F.countDistinct(id_col).alias("df"))
+
+
+def bm25_topk(
+    rows: DataFrame,
+    n_docs: Column,
+    avgdl: Column,
+    k: int,
+    id_col: str = "doc_id",
+    weighted: bool = False,
+) -> DataFrame:
+    """The BM25 scorer: top-``k`` ``(id, score)`` from per-(doc, term)
+    rows ``(id, token, tf, dl, df[, w])``.
+
+    idf(t) = ln( (N - df + 0.5) / (df + 0.5) + 1 )   [Robertson/Lucene]
+    score(d) = Σ_t [w ·] idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
+
+    ``n_docs``/``avgdl`` are Columns: a literal for an index whose
+    stats are known when the query is defined, a column of a
+    crossJoined stats row otherwise. ``weighted`` scales each term by the row's ``w``.
+    Per-term scores are quantized at 1e-6 and summed exactly as longs,
+    so a doc's score is independent of partition/accumulation order
+    (see compare.stable_sum); the quantization error (≤5e-7/term) is
+    invisible at SCORE_DIGITS. Ties rank by id ascending."""
+    term_idf = F.col("w") * F.col("idf") if weighted else F.col("idf")
+    scored = (
+        rows.withColumn(
+            "idf",
+            F.log((n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
+        )
+        .withColumn(
+            "term_score",
+            term_idf
+            * (F.col("tf") * (K1 + 1))
+            / (F.col("tf") + K1 * (1 - B + B * F.col("dl") / avgdl)),
+        )
+        .groupBy(id_col)
+        .agg(
+            stable_round(stable_sum(F.col("term_score"), 6), SCORE_DIGITS)
+            .alias("score")
+        )
+    )
+    return (
+        scored.orderBy(F.col("score").desc(), F.col(id_col).asc())
+        .limit(k)
+        .select(id_col, "score")
+    )
+
+
+def _corpus_bm25(
+    docs: DataFrame,
+    terms: list[str] | DataFrame,
+    k: int,
+    id_col: str,
+    text_col: str,
+    dls: DataFrame | None,
+    postings: DataFrame | None,
+    weighted: bool = False,
+) -> DataFrame:
+    """Corpus-IDF BM25 inputs for :func:`bm25_search` and
+    :func:`bm25_search_weighted` (``terms`` is then the (token, w)
+    frame)."""
+    if dls is None:
+        dls = doc_lengths(docs, id_col, text_col).filter(F.col("dl") > 0)
+    # one broadcast scalar row instead of two separate ones
+    stats = docs.select(F.count("*").alias("n_docs")).crossJoin(
+        dls.select(F.avg("dl").alias("avgdl"))
+    )
+    if postings is not None:
+        qpost = _keep_terms(postings, terms)
+    else:
+        qpost = content_postings(docs, id_col, text_col, terms)
+    rows = qpost.join(F.broadcast(doc_freqs(qpost, id_col)), "token")
+    if weighted:
+        rows = rows.join(F.broadcast(terms), "token")
+    rows = rows.join(dls, id_col).crossJoin(F.broadcast(stats))
+    return bm25_topk(rows, F.col("n_docs"), F.col("avgdl"), k, id_col, weighted)
 
 
 def bm25_search(
@@ -92,9 +190,6 @@ def bm25_search(
     k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = K1,
-    b: float = B,
-    round_to: int = 4,
     dls: DataFrame | None = None,
     postings: DataFrame | None = None,
 ) -> DataFrame:
@@ -109,9 +204,6 @@ def bm25_search(
     ``postings`` — optional checkpointed :func:`content_postings`
     table (r11): when given, the query-term postings are a FILTER of
     it instead of another tokenize pass over the corpus.
-
-    idf(t) = ln( (N - df + 0.5) / (df + 0.5) + 1 )   [Robertson/Lucene]
-    score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
 
     avgdl is over docs having ≥1 token (zero-token docs can never
     match a query, so their exclusion from avgdl is the only —
@@ -128,62 +220,8 @@ def bm25_search(
     earlier shape aggregated full postings and derived dl from them:
     that shuffled every (doc, token) pair twice per query.
     """
-    from cocoindex_data_ingestion_spark.functions.text import (
-        is_content_token, tokenize,
-    )
-
-    if dls is None:
-        dls = doc_lengths(docs, id_col, text_col).filter(F.col("dl") > 0)
-
-    # one broadcast scalar row instead of two separate ones
-    stats = docs.select(F.count("*").alias("n_docs")).crossJoin(
-        dls.select(F.avg("dl").alias("avgdl"))
-    )
-
-    qterms = list(dict.fromkeys(t.lower() for t in query_terms))
-    if postings is not None:
-        qpost = postings.filter(F.col("token").isin(qterms))
-    else:
-        qpost = (
-            docs.select(
-                F.col(id_col), F.explode(tokenize(text_col)).alias("token")
-            )
-            .filter(is_content_token("token") & F.col("token").isin(qterms))
-            .groupBy(id_col, "token")
-            .agg(F.count("*").alias("tf"))
-        )
-
-    df_per_token = qpost.groupBy("token").agg(
-        F.countDistinct(id_col).alias("df")
-    )
-
-    scored = (
-        qpost.join(F.broadcast(df_per_token), "token")
-        .join(dls, id_col)
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(
-                (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-            ),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-        .groupBy(id_col)
-        # per-term scores quantized at 1e-6 then summed exactly as longs:
-        # the doc score is independent of partition/accumulation order
-        # (see compare.stable_sum) — the quantization error (≤5e-7/term)
-        # is invisible at round_to=4
-        .agg(stable_round(stable_sum(F.col("term_score"), 6), round_to).alias("score"))
-    )
-    return (
-        scored.orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "score")
+    return _corpus_bm25(
+        docs, query_tokens(query_terms), k, id_col, text_col, dls, postings
     )
 
 
@@ -193,9 +231,6 @@ def bm25_search_candidate_idf(
     k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = K1,
-    b: float = B,
-    round_to: int = 4,
 ) -> DataFrame:
     """Reference-exact BM25 compat mode: every corpus statistic is
     computed over the CANDIDATE SET (documents matching ≥1 query
@@ -220,51 +255,21 @@ def bm25_search_candidate_idf(
     lazily checkpointed — three consumers (candidates, df, scoring)
     would otherwise each replay the postings scan.
     """
-    from cocoindex_data_ingestion_spark.functions.text import (
-        is_content_token, tokenize,
-    )
-
-    qterms = list(dict.fromkeys(t.lower() for t in query_terms))
-    qpost = (
-        docs.select(F.col(id_col), F.explode(tokenize(text_col)).alias("token"))
-        .filter(is_content_token("token") & F.col("token").isin(qterms))
-        .groupBy(id_col, "token")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    qpost = content_postings(
+        docs, id_col, text_col, query_tokens(query_terms)
+    ).localCheckpoint(eager=False)
     cand_ids = qpost.select(id_col).distinct()
     # full document length (all content tokens), restricted to candidates
     cand_dls = doc_lengths(docs, id_col, text_col).join(cand_ids, id_col)
     stats = cand_ids.agg(F.count("*").alias("n_docs")).crossJoin(
         cand_dls.agg(F.avg("dl").alias("avgdl"))
     )
-    df_per_token = qpost.groupBy("token").agg(
-        F.countDistinct(id_col).alias("df")
-    )
-    scored = (
-        qpost.join(F.broadcast(df_per_token), "token")
+    rows = (
+        qpost.join(F.broadcast(doc_freqs(qpost, id_col)), "token")
         .join(cand_dls, id_col)
         .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(
-                (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-            ),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-        .groupBy(id_col)
-        .agg(stable_round(stable_sum(F.col("term_score"), 6), round_to).alias("score"))
     )
-    return (
-        scored.orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "score")
-    )
+    return bm25_topk(rows, F.col("n_docs"), F.col("avgdl"), k, id_col)
 
 
 def bm25_search_weighted(
@@ -273,9 +278,6 @@ def bm25_search_weighted(
     k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = K1,
-    b: float = B,
-    round_to: int = 4,
     dls: DataFrame | None = None,
     postings: DataFrame | None = None,
 ) -> DataFrame:
@@ -290,57 +292,8 @@ def bm25_search_weighted(
     table (r11): the weighted-term postings become a broadcast
     semi-filter of it instead of a tokenize pass.
     """
-    from cocoindex_data_ingestion_spark.functions.text import (
-        is_content_token, tokenize,
-    )
-
-    if dls is None:
-        dls = doc_lengths(docs, id_col, text_col).filter(F.col("dl") > 0)
-    stats = docs.select(F.count("*").alias("n_docs")).crossJoin(
-        dls.select(F.avg("dl").alias("avgdl"))
-    )
-    if postings is not None:
-        qpost = postings.join(
-            F.broadcast(weighted_terms.select("token")), "token"
-        )
-    else:
-        qpost = (
-            docs.select(
-                F.col(id_col), F.explode(tokenize(text_col)).alias("token")
-            )
-            .filter(is_content_token("token"))
-            .join(F.broadcast(weighted_terms.select("token")), "token")
-            .groupBy(id_col, "token")
-            .agg(F.count("*").alias("tf"))
-        )
-    df_per_token = qpost.groupBy("token").agg(
-        F.countDistinct(id_col).alias("df")
-    )
-    scored = (
-        qpost.join(F.broadcast(df_per_token), "token")
-        .join(F.broadcast(weighted_terms), "token")
-        .join(dls, id_col)
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(
-                (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-            ),
-        )
-        .withColumn(
-            "term_score",
-            F.col("w")
-            * F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-        .groupBy(id_col)
-        .agg(stable_round(stable_sum(F.col("term_score"), 6), round_to).alias("score"))
-    )
-    return (
-        scored.orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "score")
+    return _corpus_bm25(
+        docs, weighted_terms, k, id_col, text_col, dls, postings, weighted=True
     )
 
 
@@ -375,7 +328,7 @@ def prf_expansion_terms(
         is_content_token, tokenize,
     )
 
-    qterms = list(dict.fromkeys(t.lower() for t in query_terms))
+    qterms = query_tokens(query_terms)
     base = bm25_search(
         docs, qterms, k=fb_docs, id_col=id_col, text_col=text_col, dls=dls,
         postings=postings,
@@ -523,7 +476,7 @@ def tfidf_weights(
 
     One postings shuffle; df and the doc count are vocabulary-/scalar-
     sized broadcasts (the unigram_logprob pattern)."""
-    post = build_postings(docs, id_col, text_col)
+    post = content_postings(docs, id_col, text_col)
     stats = docs.agg(F.count(F.col(id_col)).alias("n_docs"))
     dfreq = post.groupBy("token").agg(F.count("*").alias("df"))
     return (

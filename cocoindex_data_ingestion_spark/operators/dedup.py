@@ -267,7 +267,7 @@ def minhash_buckets(
     if hash_fn == "md5":
         docs = spread_python_stage(docs, id_col)
     rows_per_band = num_hashes // bands
-    # explode-then-filter for codegen (see build_postings), then
+    # explode-then-filter for codegen (see bm25.content_postings), then
     # per-doc dropDuplicates BEFORE hashing: min over the distinct
     # token set equals min over the multiset, so signatures are
     # unchanged, and the num_hashes hash evaluations run on distinct

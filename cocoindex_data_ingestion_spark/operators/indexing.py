@@ -18,6 +18,15 @@ reference's externalized indexes (Qdrant collections, Postgres GIN):
   operators (same math, same rounding) — the DuckDB oracles are
   shared.
 
+Every BM25 path here — ``indexed_bm25``, ``indexed_bm25_weighted``,
+``SegmentedPostingsIndex.search`` — scores through the one scorer
+``bm25.bm25_topk``, and every postings write (``build_search_index``,
+``SegmentedPostingsIndex.add_segment``) takes its rows from the one
+postings pass ``bm25.content_postings``. The token-bucket count
+of every postings layout is the constant ``POSTINGS_BUCKETS``: a
+count given at build time but not at query time would silently prune
+away postings.
+
 At cluster scale the same layout is a Delta/Iceberg table with
 bucketing on token / z-order on signature; partition pruning is what
 turns O(corpus) per query into O(result).
@@ -34,29 +43,27 @@ from cocoindex_data_ingestion_spark.functions.parallel import spread_python_stag
 
 from cocoindex_data_ingestion_spark.functions.localrel import local_df
 
-from cocoindex_data_ingestion_spark.functions.compare import (
-    stable_round,
-    stable_sum,
-)
+from cocoindex_data_ingestion_spark.functions.compare import stable_round
 from cocoindex_data_ingestion_spark.functions.similarity import dot
-from cocoindex_data_ingestion_spark.functions.text import bm25_tokens
-from cocoindex_data_ingestion_spark.operators.bm25 import B, K1
+from cocoindex_data_ingestion_spark.operators.bm25 import (
+    bm25_topk, content_postings, doc_freqs, query_tokens,
+)
 from cocoindex_data_ingestion_spark.operators.vector_search import lsh_signature
 
 
 POSTINGS_BUCKETS = 64  # token-hash partition count of the postings layout
 
 
-def _token_bucket(token: Column, n_buckets: int = POSTINGS_BUCKETS) -> Column:
+def _token_bucket(token: Column) -> Column:
     # crc32 == zlib.crc32, so the query side can compute the same
     # bucket driver-side (static partition pruning) without Spark
-    return F.pmod(F.crc32(token.cast("binary")), F.lit(n_buckets))
+    return F.pmod(F.crc32(token.cast("binary")), F.lit(POSTINGS_BUCKETS))
 
 
-def _token_buckets_py(terms: list[str], n_buckets: int = POSTINGS_BUCKETS) -> list[int]:
+def _token_buckets_py(terms: list[str]) -> list[int]:
     import zlib
 
-    return sorted({zlib.crc32(t.encode("utf-8")) % n_buckets for t in terms})
+    return sorted({zlib.crc32(t.encode("utf-8")) % POSTINGS_BUCKETS for t in terms})
 
 
 # Resolved-layout reader cache: spark.read.parquet pays file listing +
@@ -144,7 +151,6 @@ def build_search_index(
     vec_id_col: str = "vec_id",
     vec_col: str = "embedding",
     lsh_bits: int = 8,
-    n_buckets: int = POSTINGS_BUCKETS,
     ivf_stride: int | None = None,
     ivf_n_cells: int | None = None,
     ivf_assign: str = "expr",
@@ -159,9 +165,9 @@ def build_search_index(
 
     Postings are DENORMALIZED (each row carries its doc's length and
     its token's document frequency) and partitioned by
-    ``crc32(token) % n_buckets``:
+    ``crc32(token) % POSTINGS_BUCKETS``:
 
-    - bounded partition count → directory listing stays O(n_buckets)
+    - bounded partition count → directory listing stays O(buckets)
       no matter the vocabulary size (per-token dirs would be millions
       of object-store prefixes at 100 TB);
     - a query reads only its terms' buckets (static pruning) and the
@@ -170,13 +176,6 @@ def build_search_index(
     - dl/df in-row → query-time scoring needs NO join against the
       corpus-sized doclens table — one pruned read, one small groupBy.
     """
-    from cocoindex_data_ingestion_spark.functions.text import (
-        is_content_token, tokenize,
-    )
-
-    toks = docs.select(
-        F.col(id_col), F.explode(tokenize(text_col)).alias("token")
-    ).filter(is_content_token("token"))
     # ONE corpus tokenize pass (r11, guide §1.4/§6): the postings
     # aggregate feeds FOUR consumers (doclens write, df table, the
     # denormalized postings write, the avgdl scalar) across separate
@@ -185,20 +184,16 @@ def build_search_index(
     # checkpointed frame is the narrow (id, token, tf) projection,
     # orders of magnitude smaller than the text it derives from —
     # materializing it is exactly what the layout build writes anyway.
-    postings = (
-        toks.groupBy(id_col, "token")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True)
-    )
+    postings = content_postings(docs, id_col, text_col).localCheckpoint(eager=True)
 
     dls = postings.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     dls.write.mode("overwrite").parquet(f"{index_dir}/doclens")
 
-    dfs = postings.groupBy("token").agg(F.countDistinct(id_col).alias("df"))
     denorm = (
         postings.join(dls, id_col)
-        .join(dfs, "token")  # vocabulary-sized — let AQE pick the strategy
-        .withColumn("tbucket", _token_bucket(F.col("token"), n_buckets))
+        # vocabulary-sized — let AQE pick the strategy
+        .join(doc_freqs(postings, id_col), "token")
+        .withColumn("tbucket", _token_bucket(F.col("token")))
     )
     (
         denorm.repartition("tbucket")
@@ -218,21 +213,19 @@ def build_search_index(
     from cocoindex_data_ingestion_spark.functions.similarity import l2_norm
 
     # norm + LSH signature computed ONCE for both vector layouts
-    # (r11, §1.4): the two writes below are separate actions, so the
-    # un-checkpointed frame re-scanned embeddings and re-evaluated the
-    # signature per write.
-    vectors = embeddings.select(
+    # (r11, §1.4): the flat layout for exact scans (no small-files
+    # overhead) is written first, and the sig-partitioned layout for
+    # ANN partition pruning is re-read from it — disk-backed reuse,
+    # with no executor-memory checkpoint of the widest build data.
+    embeddings.select(
         F.col(vec_id_col),
         F.col(vec_col),
         l2_norm(vec_col).alias("norm"),
         lsh_signature(vec_col, lsh_bits).alias("sig"),
-    ).localCheckpoint(eager=True)
-    # flat layout for exact scans (no small-files overhead) +
-    # sig-partitioned layout for ANN partition pruning
-    vectors.write.mode("overwrite").parquet(f"{index_dir}/vectors")
-    vectors.write.mode("overwrite").partitionBy("sig").parquet(
-        f"{index_dir}/vectors_lsh"
-    )
+    ).write.mode("overwrite").parquet(f"{index_dir}/vectors")
+    spark.read.parquet(f"{index_dir}/vectors").write.mode(
+        "overwrite"
+    ).partitionBy("sig").parquet(f"{index_dir}/vectors_lsh")
     invalidate_layout(index_dir)
     if ivf_stride is not None or ivf_n_cells is not None:
         build_ivf_layout(
@@ -247,10 +240,7 @@ def build_search_index(
     if pq and (ivf_stride is not None or ivf_n_cells is not None):
         build_ivfpq_codes(embeddings.sparkSession, index_dir, vec_id_col)
     if positions:
-        build_positions_layout(
-            docs, index_dir, id_col=id_col, text_col=text_col,
-            n_buckets=n_buckets,
-        )
+        build_positions_layout(docs, index_dir, id_col=id_col, text_col=text_col)
 
 
 def build_ivfpq_codes(
@@ -382,9 +372,6 @@ def indexed_bm25(
     query_terms: list[str],
     k: int = 10,
     id_col: str = "doc_id",
-    k1: float = K1,
-    b: float = B,
-    round_to: int = 4,
 ) -> DataFrame:
     """BM25 from the prebuilt index: one bucket-pruned postings read
     (dl/df carried in-row — no joins); the two corpus scalars
@@ -395,45 +382,19 @@ def indexed_bm25(
     No corpus scan, no tokenization. Arithmetic is identical to the
     broadcast form: n_docs stays integral, avgdl stays the stored
     double."""
-    qterms = list(dict.fromkeys(t.lower() for t in query_terms))
-    postings = _query_postings(spark, index_dir, qterms)
+    postings = _query_postings(spark, index_dir, query_tokens(query_terms))
     n_docs, avgdl = _stats_scalars(spark, index_dir)
-
-    scored = (
-        postings
-        .withColumn(
-            "idf",
-            F.log((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(avgdl))),
-        )
-        .groupBy(id_col)
-        # same order-independent fixed-point sum as bm25.bm25_search —
-        # keeps the shared DuckDB oracle bit-identical
-        .agg(stable_round(stable_sum(F.col("term_score"), 6), round_to).alias("score"))
-    )
-    return (
-        scored.orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "score")
-    )
+    return bm25_topk(postings, F.lit(n_docs), F.lit(avgdl), k, id_col)
 
 
 def _query_postings(
-    spark: SparkSession,
-    index_dir: str,
-    qterms: list[str],
-    n_buckets: int = POSTINGS_BUCKETS,
+    spark: SparkSession, index_dir: str, qterms: list[str]
 ) -> DataFrame:
     """Pruned postings read for a term list: static partition pruning
     on the crc32 token bucket + a token IN-list that parquet pushes
     into row-group stats (postings are token-sorted per bucket)."""
     return read_layout(spark, f"{index_dir}/postings").filter(
-        F.col("tbucket").isin(_token_buckets_py(qterms, n_buckets))
+        F.col("tbucket").isin(_token_buckets_py(qterms))
         & F.col("token").isin(qterms)
     )
 
@@ -456,8 +417,7 @@ def indexed_keyword_overlap(
     a count per doc — O(query-term postings), identical result
     (postings and ``bm25_tokens`` share the tokenizer + content
     filter, functions/text.py)."""
-    qterms = list(dict.fromkeys(t.lower() for t in query_terms))
-    postings = _query_postings(spark, index_dir, qterms)
+    postings = _query_postings(spark, index_dir, query_tokens(query_terms))
     overlap = postings.groupBy(id_col).agg(F.count("*").alias("n_overlap"))
     return candidates.join(overlap, id_col, "left").withColumn(
         "n_overlap", F.coalesce(F.col("n_overlap"), F.lit(0))
@@ -950,43 +910,23 @@ def indexed_bm25_weighted(
     weighted_terms: list[tuple[str, float]],
     k: int = 10,
     id_col: str = "doc_id",
-    k1: float = K1,
-    b: float = B,
-    round_to: int = 4,
 ) -> DataFrame:
     """Weighted-term BM25 from the prebuilt index: per-term weights
     scale each term's contribution; the term list drives the same
     bucket pruning as :func:`indexed_bm25` (terms are literal query
     parameters, so the probe is static partition pruning + an IN-list
-    pushed into row-group stats)."""
+    pushed into row-group stats), and the corpus stats are the same
+    in-memory literals."""
     terms = [t.lower() for t, _w in weighted_terms]
     wdf = local_df(
         spark, [(t.lower(), float(w)) for t, w in weighted_terms],
         "token string, w double",
     )
     postings = _query_postings(spark, index_dir, terms)
-    stats = read_layout(spark, f"{index_dir}/stats")
-    scored = (
-        postings.join(F.broadcast(wdf), "token")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
-        )
-        .withColumn(
-            "term_score",
-            F.col("w")
-            * F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-        .groupBy(id_col)
-        .agg(stable_round(stable_sum(F.col("term_score"), 6), round_to).alias("score"))
-    )
-    return (
-        scored.orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "score")
+    n_docs, avgdl = _stats_scalars(spark, index_dir)
+    return bm25_topk(
+        postings.join(F.broadcast(wdf), "token"),
+        F.lit(n_docs), F.lit(avgdl), k, id_col, weighted=True,
     )
 
 
@@ -1020,7 +960,7 @@ def indexed_bm25_prf(
         is_content_token, tokenize,
     )
 
-    qterms = list(dict.fromkeys(t.lower() for t in query_terms))
+    qterms = query_tokens(query_terms)
     base = indexed_bm25(spark, index_dir, qterms, k=fb_docs, id_col=id_col)
     fb_ids = base.select(id_col)
     expansion = (
@@ -1043,10 +983,10 @@ class SegmentedPostingsIndex:
     """Incrementally-maintained BM25 index, Lucene-segment shape:
     each insert batch becomes an immutable SEGMENT (postings
     partitioned by token bucket + a doc-length table + a one-row
-    stats ledger entry); deletes append doc tombstones plus a
-    negative ledger entry. Queries stay correct and pruned at every
-    point — no rebuild, ever; ``compact()`` folds segments +
-    tombstones back into one.
+    stats ledger entry); deletes append tombstones plus a negative
+    ledger entry. Queries stay correct and pruned at every point — no
+    rebuild, ever; ``compact()`` folds segments + tombstones back into
+    one.
 
     Why this shape at 100 TB: postings must stay token-bucketed for
     query pruning, but a bucketed-merge state keyed by token would
@@ -1057,10 +997,15 @@ class SegmentedPostingsIndex:
     compaction controls. Exactly Lucene/Tantivy's contract,
     re-expressed as parquet + DataFrames.
 
+    A tombstone is a ``(doc_id, seg)`` pair: it hides only the copy
+    of the doc that was live in that segment when the delete ran, so
+    a deleted id can be re-added (an update is delete_docs → add) and
+    its new copy is served and counted like any other.
+
     Correctness of scoring under deletes: df for the query's terms is
     computed from the retrieved (live) postings themselves — cheap
     because they are already term-pruned; n_docs and avgdl come from
-    the ledger (segment sums minus tombstoned docs' contributions),
+    the ledger (segment sums minus tombstoned copies' contributions),
     so scores equal an ad-hoc BM25 over the live corpus (the
     registered oracle checks precisely that).
     """
@@ -1085,12 +1030,35 @@ class SegmentedPostingsIndex:
 
         return f"{prefix}_{len(os.listdir(f'{self.path}/segments')):05d}_{uuid.uuid4().hex[:6]}"
 
+    def _union(
+        self,
+        table: str,
+        cond: Column | None = None,
+        tag: bool = False,
+        tomb: DataFrame | None = None,
+    ) -> DataFrame | None:
+        """Every segment's ``table`` (``postings`` or ``doclens``) rows
+        matching ``cond``, unioned; ``None`` when there is no segment.
+        Rows carry their segment name in ``seg`` when ``tag`` or
+        ``tomb`` is given; ``tomb`` (see :meth:`_tombstones`) drops the
+        tombstoned copies."""
+        out = None
+        for s in self._segment_dirs():
+            d = self.spark.read.parquet(f"{s}/{table}")
+            if cond is not None:
+                d = d.filter(cond)
+            if tag or tomb is not None:
+                d = d.withColumn("seg", F.lit(os.path.basename(s)))
+            out = d if out is None else out.unionByName(d)
+        if out is not None and tomb is not None:
+            out = out.join(F.broadcast(tomb), ["doc_id", "seg"], "left_anti")
+        return out
+
     def add_segment(
         self,
         docs: DataFrame,
         id_col: str = "doc_id",
         text_col: str = "text",
-        n_buckets: int = POSTINGS_BUCKETS,
         check_unique: bool = True,
     ) -> None:
         """One pass over the batch → an immutable segment.
@@ -1103,20 +1071,10 @@ class SegmentedPostingsIndex:
         (doc_id, dl) pairs — tiny next to postings); pass
         ``check_unique=False`` on bulk loads whose ids are disjoint by
         construction."""
-        from cocoindex_data_ingestion_spark.functions.text import (
-            is_content_token, tokenize,
-        )
-
-        segs = self._segment_dirs()
-        if check_unique and segs:
-            ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
-            live = None
-            for s in segs:
-                d = self.spark.read.parquet(f"{s}/doclens").select("doc_id")
-                live = d if live is None else live.unionByName(d)
-            tomb = self._tombstones()
-            if tomb is not None:
-                live = live.join(tomb, "doc_id", "left_anti")
+        docs = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+        live = self._union("doclens", tomb=self._tombstones()) if check_unique else None
+        if live is not None:
+            ids = docs.select("doc_id").distinct()
             dup = live.join(F.broadcast(ids), "doc_id").limit(1).collect()
             if dup:
                 raise ValueError(
@@ -1125,19 +1083,13 @@ class SegmentedPostingsIndex:
                 )
 
         seg = f"{self.path}/segments/{self._next_name('seg')}"
-        toks = docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokenize(text_col)).alias("token"),
-        ).filter(is_content_token("token"))
-        postings = toks.groupBy("doc_id", "token").agg(
-            F.count("*").alias("tf")
-        )
+        postings = content_postings(docs, "doc_id", text_col)
         # doclens cover EVERY doc (dl=0 for token-free ones): deletes
         # must be able to decrement the all-docs count, and BM25's idf
         # uses n_docs over ALL docs while avgdl averages only docs
         # with >= 1 token (the ad-hoc oracle's exact semantics)
         dls = (
-            docs.select(F.col(id_col).alias("doc_id"))
+            docs.select("doc_id")
             .distinct()
             .join(
                 postings.groupBy("doc_id").agg(F.sum("tf").alias("dl")),
@@ -1147,7 +1099,7 @@ class SegmentedPostingsIndex:
             .select("doc_id", F.coalesce("dl", F.lit(0)).alias("dl"))
         )
         (
-            postings.withColumn("tbucket", _token_bucket(F.col("token"), n_buckets))
+            postings.withColumn("tbucket", _token_bucket(F.col("token")))
             .repartition("tbucket")
             .sortWithinPartitions("token", "doc_id")
             .write.mode("overwrite")
@@ -1155,67 +1107,59 @@ class SegmentedPostingsIndex:
             .parquet(f"{seg}/postings")
         )
         dls.write.mode("overwrite").parquet(f"{seg}/doclens")
-        led = dls.agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.count(F.when(F.col("dl") > 0, True)).cast("long").alias("n_docs_tok"),
-            F.sum("dl").cast("long").alias("total_dl"),
+        self._ledger_row(dls).write.mode("append").parquet(
+            f"{self.path}/ledger"
         )
-        led.write.mode("append").parquet(f"{self.path}/ledger")
+
+    @staticmethod
+    def _ledger_row(dls: DataFrame, sign: int = 1) -> DataFrame:
+        """One ledger row: ``sign`` times the doc count, the count of
+        docs with >= 1 token, and the token total of ``dls``."""
+        return dls.agg(
+            (F.count("*") * sign).cast("long").alias("n_docs"),
+            (F.count(F.when(F.col("dl") > 0, True)) * sign)
+            .cast("long").alias("n_docs_tok"),
+            (F.coalesce(F.sum("dl"), F.lit(0)) * sign)
+            .cast("long").alias("total_dl"),
+        )
 
     def delete_docs(self, doc_ids: DataFrame, id_col: str = "doc_id") -> None:
-        """Tombstone a set of doc ids (idempotent per id). The
-        negative ledger entry uses the docs' stored lengths, read
-        from the (small) per-segment doclens tables."""
+        """Tombstone the live copies of a set of doc ids (idempotent:
+        an id with no live copy subtracts nothing). The negative
+        ledger entry uses the copies' stored lengths, read from the
+        (small) per-segment doclens tables."""
         ids = doc_ids.select(F.col(id_col).alias("doc_id")).distinct()
-        # subtract only ids not already tombstoned (idempotence)
-        existing = self._tombstones()
-        if existing is not None:
-            ids = ids.join(existing, "doc_id", "left_anti")
-        dls = None
-        for seg in self._segment_dirs():
-            d = self.spark.read.parquet(f"{seg}/doclens")
-            dls = d if dls is None else dls.unionByName(d)
-        if dls is None:
+        live = self._union("doclens", tag=True, tomb=self._tombstones())
+        if live is None:
             return
-        gone = dls.join(F.broadcast(ids), "doc_id")
-        led = gone.agg(
-            (-F.count("*")).cast("long").alias("n_docs"),
-            (-F.count(F.when(F.col("dl") > 0, True))).cast("long").alias("n_docs_tok"),
-            (-F.coalesce(F.sum("dl"), F.lit(0))).cast("long").alias("total_dl"),
+        gone = live.join(F.broadcast(ids), "doc_id")
+        # ledger first: the tombstone write changes what ``gone`` reads
+        self._ledger_row(gone, sign=-1).write.mode("append").parquet(
+            f"{self.path}/ledger"
         )
-        ids.write.mode("append").parquet(f"{self.path}/tombstones")
-        led.write.mode("append").parquet(f"{self.path}/ledger")
+        gone.select("doc_id", "seg").write.mode("append").parquet(
+            f"{self.path}/tombstones"
+        )
 
     def _tombstones(self) -> DataFrame | None:
         root = f"{self.path}/tombstones"
         if not any(f.endswith(".parquet") for f in os.listdir(root)):
             return None
-        return self.spark.read.parquet(root).distinct()
+        return self.spark.read.parquet(root)
 
     # -- query -------------------------------------------------------------
 
-    def search(
-        self,
-        query_terms: list[str],
-        k: int = 10,
-        k1: float = K1,
-        b: float = B,
-        round_to: int = 4,
-        n_buckets: int = POSTINGS_BUCKETS,
-    ) -> DataFrame:
-        qterms = list(dict.fromkeys(t.lower() for t in query_terms))
-        buckets = _token_buckets_py(qterms, n_buckets)
-        post = None
-        for seg in self._segment_dirs():
-            p = self.spark.read.parquet(f"{seg}/postings").filter(
-                F.col("tbucket").isin(buckets) & F.col("token").isin(qterms)
-            )
-            post = p if post is None else post.unionByName(p)
+    def search(self, query_terms: list[str], k: int = 10) -> DataFrame:
+        qterms = query_tokens(query_terms)
+        tomb = self._tombstones()
+        post = self._union(
+            "postings",
+            F.col("tbucket").isin(_token_buckets_py(qterms))
+            & F.col("token").isin(qterms),
+            tomb=tomb,
+        )
         if post is None:
             return self.spark.createDataFrame([], "doc_id long, score double")
-        tomb = self._tombstones()
-        if tomb is not None:
-            post = post.join(F.broadcast(tomb), "doc_id", "left_anti")
         ledger = self.spark.read.parquet(f"{self.path}/ledger").agg(
             F.sum("n_docs").alias("n_docs"),
             F.sum("n_docs_tok").alias("n_docs_tok"),
@@ -1226,69 +1170,36 @@ class SegmentedPostingsIndex:
             (F.col("total_dl").cast("double") / F.col("n_docs_tok")).alias("avgdl"),
         )
         # dl per matching doc: Σ tf of that doc's postings is NOT dl
-        # (only query terms present) — read dl from the doclens tables
-        # of each segment, pruned to the matched docs
-        dls = None
-        for seg in self._segment_dirs():
-            d = self.spark.read.parquet(f"{seg}/doclens")
-            dls = d if dls is None else dls.unionByName(d)
-        matched = post.select("doc_id").distinct()
-        dls = dls.join(F.broadcast(matched), "doc_id")
-        dfreq = post.groupBy("token").agg(
-            F.countDistinct("doc_id").alias("df")
+        # (only query terms present) — read dl from the doclens tables,
+        # pruned to the matched docs; under tombstones the match is on
+        # (doc_id, seg), so a deleted copy's length never joins
+        keys = ["doc_id"] if tomb is None else ["doc_id", "seg"]
+        matched = post.select(*keys).distinct()
+        dls = self._union("doclens", tag=tomb is not None).join(
+            F.broadcast(matched), keys
         )
-        scored = (
-            post.join(F.broadcast(dfreq), "token")
-            .join(dls, "doc_id")
+        rows = (
+            post.join(F.broadcast(doc_freqs(post)), "token")
+            .join(dls, keys)
             .crossJoin(F.broadcast(stats))
-            .withColumn(
-                "idf",
-                F.log(
-                    (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                    + 1.0
-                ),
-            )
-            .withColumn(
-                "term_score",
-                F.col("idf")
-                * (F.col("tf") * (k1 + 1))
-                / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-            )
-            .groupBy("doc_id")
-            .agg(
-                stable_round(stable_sum(F.col("term_score"), 6), round_to).alias(
-                    "score"
-                )
-            )
         )
-        return (
-            scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-            .select("doc_id", "score")
-        )
+        return bm25_topk(rows, F.col("n_docs"), F.col("avgdl"), k)
 
     # -- compaction --------------------------------------------------------
 
-    def compact(self, n_buckets: int = POSTINGS_BUCKETS) -> None:
+    def compact(self) -> None:
         """Fold all segments + tombstones into one segment (the
         background merge). Ledger is rewritten from the surviving
         doc-length table, tombstones cleared."""
         import shutil
+        import uuid
 
-        segs = self._segment_dirs()
-        if not segs:
-            return
-        post = None
-        dls = None
-        for seg in segs:
-            p = self.spark.read.parquet(f"{seg}/postings")
-            d = self.spark.read.parquet(f"{seg}/doclens")
-            post = p if post is None else post.unionByName(p)
-            dls = d if dls is None else dls.unionByName(d)
         tomb = self._tombstones()
-        if tomb is not None:
-            post = post.join(F.broadcast(tomb), "doc_id", "left_anti")
-            dls = dls.join(F.broadcast(tomb), "doc_id", "left_anti")
+        post = self._union("postings", tomb=tomb)
+        if post is None:
+            return
+        post = post.drop("seg")
+        dls = self._union("doclens", tomb=tomb).drop("seg")
         new_root = f"{self.path}/segments_new"
         shutil.rmtree(new_root, ignore_errors=True)
         seg = f"{new_root}/{self._next_name('compacted')}"
@@ -1299,26 +1210,20 @@ class SegmentedPostingsIndex:
             .partitionBy("tbucket")
             .parquet(f"{seg}/postings")
         )
-        dls_out = dls.localCheckpoint(eager=True)
-        dls_out.write.mode("overwrite").parquet(f"{seg}/doclens")
-        led = dls_out.agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.count(F.when(F.col("dl") > 0, True)).cast("long").alias("n_docs_tok"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("total_dl"),
-        )
+        dls.write.mode("overwrite").parquet(f"{seg}/doclens")
         # Crash-safe swap: every replacement is fully WRITTEN before
         # any live directory is touched, and the cutover is a chain of
         # renames — never a delete-then-write. Each intermediate state
         # is consistent: after the segments swap, the OLD ledger still
         # sums to the live-doc totals (its negative delete entries
-        # cancel the tombstoned docs the compaction dropped) and the
-        # old tombstones anti-join ids that no longer exist, which is
+        # cancel the tombstoned copies the compaction dropped) and the
+        # old tombstones name segments that no longer exist, which is
         # a no-op. A crash at any point leaves a searchable index.
-        import uuid as _uuid
-
-        led.write.mode("overwrite").parquet(f"{self.path}/ledger_new")
+        self._ledger_row(
+            self.spark.read.parquet(f"{seg}/doclens")
+        ).write.mode("overwrite").parquet(f"{self.path}/ledger_new")
         os.makedirs(f"{self.path}/tombstones_new", exist_ok=True)
-        trash = f"{self.path}/_trash_{_uuid.uuid4().hex[:8]}"
+        trash = f"{self.path}/_trash_{uuid.uuid4().hex[:8]}"
         os.makedirs(trash)
         os.rename(f"{self.path}/segments", f"{trash}/segments")
         os.rename(new_root, f"{self.path}/segments")
@@ -1334,10 +1239,9 @@ def build_positions_layout(
     index_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = POSTINGS_BUCKETS,
 ) -> None:
     """Positional postings layout: ``(token, doc_id, pos)`` rows
-    partitioned by ``crc32(token) % n_buckets`` and token-sorted
+    partitioned by ``crc32(token) % POSTINGS_BUCKETS`` and token-sorted
     within partitions — the phrase/proximity companion of the BM25
     postings layout (same bucket discipline, same pruning math:
     a phrase query reads only its terms' buckets, the token IN-list
@@ -1355,7 +1259,7 @@ def build_positions_layout(
         F.col(id_col), F.posexplode(tokenize(text_col)).alias("pos", "token")
     )
     (
-        pos.withColumn("tbucket", _token_bucket(F.col("token"), n_buckets))
+        pos.withColumn("tbucket", _token_bucket(F.col("token")))
         .repartition("tbucket")
         .sortWithinPartitions("token", id_col, "pos")
         .write.mode("overwrite")
@@ -1371,7 +1275,6 @@ def indexed_phrase(
     phrase: list[str],
     k: int = 20,
     id_col: str = "doc_id",
-    n_buckets: int = POSTINGS_BUCKETS,
 ) -> DataFrame:
     """Exact-phrase search from the prebuilt positional layout: each
     term's occurrence list comes from a bucket-pruned read (static
@@ -1382,7 +1285,7 @@ def indexed_phrase(
     terms = [t.lower() for t in phrase]
     uniq = list(dict.fromkeys(terms))
     pos = read_layout(spark, f"{index_dir}/positions").filter(
-        F.col("tbucket").isin(_token_buckets_py(uniq, n_buckets))
+        F.col("tbucket").isin(_token_buckets_py(uniq))
         & F.col("token").isin(uniq)
     )
     cur = pos.filter(F.col("token") == terms[0]).select(
@@ -1409,7 +1312,6 @@ def indexed_proximity(
     window: int = 5,
     k: int = 20,
     id_col: str = "doc_id",
-    n_buckets: int = POSTINGS_BUCKETS,
 ) -> DataFrame:
     """Proximity search from the positional layout: documents where
     ``term_a`` and ``term_b`` co-occur within ``window`` tokens (any
@@ -1424,7 +1326,7 @@ def indexed_proximity(
     """
     ta, tb = term_a.lower(), term_b.lower()
     pos = read_layout(spark, f"{index_dir}/positions").filter(
-        F.col("tbucket").isin(_token_buckets_py([ta, tb], n_buckets))
+        F.col("tbucket").isin(_token_buckets_py([ta, tb]))
         & F.col("token").isin([ta, tb])
     )
     a = pos.filter(F.col("token") == ta).select(id_col, F.col("pos").alias("pa"))

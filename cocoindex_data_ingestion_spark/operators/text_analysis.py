@@ -130,7 +130,7 @@ def text_profile(
     ``lang_scores``) are lambda higher-order functions, which Spark
     evaluates in the INTERPRETED expression path — measured ~6-13x
     the cost of this shape on the profile suite (the same lesson as
-    bm25.build_postings' explode-then-filter note).
+    bm25.content_postings' explode-then-filter note).
 
     Shape: explode tokens, then aggregate TWICE — first to distinct
     (doc, token, count), then to the per-doc profile. The two-level

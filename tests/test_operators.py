@@ -967,6 +967,49 @@ def test_segmented_postings_index_compaction(spark, sf_dir, tmp_path):
     assert before[0][0] not in {d for d, _ in post}
 
 
+def test_segmented_postings_index_readd_after_delete(spark, sf_dir, tmp_path):
+    # a tombstone hides only the copies that were live when it was
+    # written: a deleted id re-added with new text is served and
+    # counted, and a second delete subtracts the new copy
+    from cocoindex_data_ingestion_spark.operators.bm25 import bm25_search
+    from cocoindex_data_ingestion_spark.operators.indexing import (
+        SegmentedPostingsIndex,
+    )
+    from cocoindex_data_ingestion_spark.sources.tables import load_table
+
+    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
+    ids = [r.doc_id for r in docs.orderBy("doc_id").limit(3).collect()]
+    old = docs.filter(~F.col("doc_id").isin(ids))
+    new = spark.createDataFrame(
+        [(i, f"spark join window hash spark rewrite {i}") for i in ids],
+        "doc_id long, text string",
+    )
+    gone = new.select("doc_id")
+    terms = ["spark", "join", "window", "hash"]
+    idx = SegmentedPostingsIndex(spark, str(tmp_path / "seg"))
+    idx.add_segment(docs)
+
+    def check(live):
+        got = [(r.doc_id, r.score) for r in idx.search(terms, k=10).collect()]
+        exp = [(r.doc_id, r.score) for r in bm25_search(live, terms, k=10).collect()]
+        assert got == exp
+        n = spark.read.parquet(f"{idx.path}/ledger").agg(F.sum("n_docs")).first()[0]
+        assert n == live.count()
+        return {d for d, _ in got}
+
+    idx.delete_docs(gone)
+    check(old)
+    idx.add_segment(new)
+    assert set(ids) <= check(old.unionByName(new))
+    idx.delete_docs(gone)
+    assert not set(ids) & check(old)
+    idx.add_segment(new)
+    assert set(ids) <= check(old.unionByName(new))
+    idx.delete_docs(gone)
+    idx.delete_docs(gone)  # no live copy left: subtracts nothing
+    check(old)
+
+
 def test_indexed_ivfpq_cell_pruned_and_consistent(spark, tmp_path, sf_dir):
     """IVF-PQ composite: (a) the ADC scan is statically cell-pruned
     (PartitionFilters on cent_id in the byte-code read), (b) results

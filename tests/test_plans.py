@@ -77,6 +77,18 @@ def test_bm25_adhoc_shuffle_ceiling(spark, qs):
     assert _shuffles(_plan(qs["bm25_search"](spark, SF))) <= 6
 
 
+def test_bm25_prf_parquet_scan_ceiling(spark, qs):
+    """PRF's base leg, expansion counts, weighted rescore and doc
+    lengths all read ONE checkpointed content-postings table (r11):
+    the formatted plan names "Scan parquet" 8 times (each scan twice —
+    tree and details; 30 when every leg re-tokenized the corpus)."""
+    df = qs["bm25_prf_search"](spark, SF)
+    formatted = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert formatted.count("Scan parquet") <= 8
+
+
 def test_no_python_udfs_on_relational_paths(spark, qs):
     """TPC-H-shape and event queries must stay JVM-side end to end:
     no BatchEvalPython / ArrowEvalPython stages."""

@@ -105,23 +105,56 @@ def test_golden_dump_stable_and_diffable(spark, tmp_path):
     assert data[0]["doc_id"] == 1 and data[0]["vec"] == [0.1]
 
 
-def test_indexed_operators_match_adhoc(spark, tmp_path, sf_dir):
-    """Prebuilt-index operators must return exactly the ad-hoc
-    operators' results (same math, same rounding)."""
-    from pyspark.sql import functions as F
-
-    from cocoindex_data_ingestion_spark.operators import bm25, indexing, vector_search
+@pytest.fixture(scope="module")
+def search_indexes(spark, sf_dir, tmp_path_factory):
+    """sf0.001 corpus, its prebuilt search index, and a one-segment,
+    delete-free SegmentedPostingsIndex over the same docs."""
+    from cocoindex_data_ingestion_spark.operators import indexing
     from cocoindex_data_ingestion_spark.sources.tables import load_table
 
     docs = load_table(spark, "documents", sf_dir)
     emb = load_table(spark, "embeddings", sf_dir).filter("vec_id <> 0")
-    idx = str(tmp_path / "idx")
+    root = tmp_path_factory.mktemp("search_indexes")
+    idx = str(root / "idx")
     indexing.build_search_index(docs, emb, idx, lsh_bits=8)
+    seg = indexing.SegmentedPostingsIndex(spark, str(root / "seg"))
+    seg.add_segment(docs)
+    return docs, emb, idx, seg
 
-    terms = ["spark", "join", "window", "hash"]
-    adhoc = [tuple(r) for r in bm25.bm25_search(docs, terms, k=10).collect()]
-    indexed = [tuple(r) for r in indexing.indexed_bm25(spark, idx, terms, k=10).collect()]
-    assert adhoc == indexed
+
+@pytest.mark.parametrize(
+    "terms",
+    [
+        ["spark", "join", "window", "hash"],
+        ["Spark", "spark", "JOIN"],
+        ["spark", "join", "zzzqabsent"],
+    ],
+    ids=["plain", "mixed_case_dup", "absent_term"],
+)
+def test_indexed_operators_match_adhoc(spark, sf_dir, search_indexes, terms):
+    """Prebuilt-index operators must return exactly the ad-hoc
+    operators' results (same math, same rounding); every BM25 path —
+    indexed, segmented, weighted at unit weights — returns the same
+    (id, score) rows as bm25_search."""
+    from pyspark.sql import functions as F
+
+    from cocoindex_data_ingestion_spark.functions.localrel import local_df
+    from cocoindex_data_ingestion_spark.operators import bm25, indexing, vector_search
+    from cocoindex_data_ingestion_spark.sources.tables import load_table
+
+    docs, emb, idx, seg = search_indexes
+
+    def rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    adhoc = rows(bm25.bm25_search(docs, terms, k=10))
+    assert adhoc
+    assert rows(indexing.indexed_bm25(spark, idx, terms, k=10)) == adhoc
+    assert rows(seg.search(terms, k=10)) == adhoc
+    unit = [(t, 1.0) for t in bm25.query_tokens(terms)]
+    assert rows(indexing.indexed_bm25_weighted(spark, idx, unit, k=10)) == adhoc
+    wdf = local_df(spark, unit, "token string, w double")
+    assert rows(bm25.bm25_search_weighted(docs, wdf, k=10)) == adhoc
 
     q = load_table(spark, "embeddings", sf_dir).filter("vec_id = 0").select(
         F.col("embedding").alias("qvec")
